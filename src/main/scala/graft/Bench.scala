@@ -1089,9 +1089,12 @@ object Bench {
     // full-precision per-query map folded into the contract's
     // `queries` key, lands in a plain file the driver/judge can read.
     // Additions-only: stdout is unchanged, seconds are the same values.
+    // `cpus` and `run_id` tell one configuration's record from another's:
+    // a 32- and an 8-core run write the same file.
     try {
+      val runId = java.util.UUID.randomUUID().toString
       val summary = totalLine.patch(totalLine.lastIndexOf('}'),
-        s""","queries":$qs,"bytes":$bytesJson}""", 1)
+        s""","cpus":$cpus,"run_id":"$runId","queries":$qs,"bytes":$bytesJson}""", 1)
       val target = java.nio.file.Paths.get("bench_summary.json").toAbsolutePath
       val tmp = java.nio.file.Files.createTempFile(
         target.getParent, "bench_summary", ".tmp")
@@ -1100,7 +1103,10 @@ object Bench {
       java.nio.file.Files.move(tmp, target,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch { case _: Throwable => () }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] bench_summary.json write failed: $e")
+    }
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.migration
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.sources.RateLimitedSink
 
@@ -36,22 +37,49 @@ object Pipelines {
     * The fetch is restricted to attachments referenced by the SELECTED
     * messages first (semi-join on the attachments_href message id, the
     * reference's per-message attachment fetch, TP:280-284) — a --tickets
-    * point migration must fetch that ticket's payloads, not the corpus's. */
-  private def withPayloads(
-      attachments: DataFrame, selectedMessages: DataFrame): DataFrame = {
+    * point migration must fetch that ticket's payloads, not the corpus's.
+    *
+    * Fan-out: the listing rows are tiny, so AQE would coalesce them into
+    * ONE task and the GETs would run one after another. They are spread
+    * round-robin over `defaultParallelism` partitions first, so every core
+    * fetches (round-robin sorts each input partition before assigning
+    * rows, so a retried task re-fetches the same URLs). The per-origin
+    * token bucket in HttpFetch is per JVM, so the rate limit holds however
+    * many tasks share it.
+    *
+    * One GET per URL: the fetched frame is eagerly `localCheckpoint`ed. It
+    * feeds BOTH the uploaded and failed-note branches of the final plan
+    * (and the publish + error-count actions) — left lazy, the
+    * side-effecting fetch stage would re-GET every attachment once per
+    * consumer, and a URL that succeeds in one execution but fails in the
+    * other could appear both uploaded and failed-noted. The checkpoint is
+    * released when `body` returns. */
+  private def withPayloads[T](
+      attachments: DataFrame, selectedMessages: DataFrame)(body: DataFrame => T): T = {
     val relevant = attachments.join(
       selectedMessages.filter(col("attachments_href").isNotNull)
         .select(MigrationFunctions.hrefAttachmentMessageId(
           col("attachments_href")).as("message_id")),
       Seq("message_id"), "left_semi")
-    if (relevant.columns.contains("payload")) relevant
-    // eager localCheckpoint: the fetched frame feeds BOTH the uploaded and
-    // failed-note branches of the final plan (and publish + error-count
-    // actions) — left lazy, the side-effecting HTTP fetch stage would
-    // re-GET every attachment once per consumer, and a URL that succeeds
-    // in one execution but fails in the other could appear both uploaded
-    // and failed-noted. Checkpointing pins one fetch outcome per URL.
-    else AttachmentFetch.fetchPayloads(relevant).localCheckpoint(true)
+    if (relevant.columns.contains("payload")) body(relevant)
+    else materialized(AttachmentFetch.fetchPayloads(relevant.repartition(
+      relevant.sparkSession.sparkContext.defaultParallelism)), "fetch attachment payloads")(body)
+  }
+
+  /** Run `body` over an eager `localCheckpoint` of `df`, then free the
+    * checkpoint's blocks — `Dataset.unpersist` does not, so the RDD under
+    * the checkpoint's `LogicalRDD` is unpersisted. The checkpoint jobs are
+    * described as `what`, so a listener or the UI can tell them apart. */
+  private def materialized[T](df: DataFrame, what: String)(body: DataFrame => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft migration: $what")
+    val copy = try df.localCheckpoint(true) finally sc.setJobDescription(prev)
+    try body(copy)
+    finally copy.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 
   /** F4: --startPage/--stopPage prune when the input carries a `page`
@@ -118,18 +146,27 @@ object Pipelines {
         case Right(_) =>
       }
     }
-    val selected =
+    // Acquire once: tickets and their messages are materialized before
+    // any consumer runs. The payload fetch and every branch of the publish
+    // plan read these copies, so each Groove page is GET once per call and
+    // the conversations and their messages come from the same read.
+    val selection =
       if (opts.tickets.nonEmpty) tickets.filter(col("number").isin(opts.tickets: _*))
       else pageFiltered(tickets, opts)
-    val selectedMessages = messages.join(
-      selected.select(col("number").as("ticket_number")), Seq("ticket_number"), "left_semi")
-    val threads = TicketTransform.threadsByTicket(
-      selectedMessages, withPayloads(attachments, selectedMessages),
-      hsUsers, hsCustomers, opts.customerEmails)
-    val convs = TicketTransform.conversations(
-      selected, threads, hsMailboxes, hsCustomers, defaultMailboxEmail,
-      if (opts.checkDuplicates) Some(existingConversations) else None)
-    Right(publishOkAndReport(convs, ratePerMinute, batchSize, parallelism, errorCsv)(post))
+    materialized(selection, "acquire tickets") { selected =>
+      val threadMessages = messages.join(
+        selected.select(col("number").as("ticket_number")), Seq("ticket_number"), "left_semi")
+      materialized(threadMessages, "acquire messages") { selectedMessages =>
+        withPayloads(attachments, selectedMessages) { payloads =>
+          val threads = TicketTransform.threadsByTicket(
+            selectedMessages, payloads, hsUsers, hsCustomers, opts.customerEmails)
+          val convs = TicketTransform.conversations(
+            selected, threads, hsMailboxes, hsCustomers, defaultMailboxEmail,
+            if (opts.checkDuplicates) Some(existingConversations) else None)
+          Right(publishOkAndReport(convs, ratePerMinute, batchSize, parallelism, errorCsv)(post))
+        }
+      }
+    }
   }
 
   /** view-ticket (§3.3, VT:46-67): point lookup + dump of the assembled
@@ -141,11 +178,12 @@ object Pipelines {
       opts: SyncOptions = SyncOptions()): String = {
     val one = tickets.filter(col("number") === number)
     val oneMessages = messages.filter(col("ticket_number") === number)
-    val threads = TicketTransform.threadsByTicket(
-      oneMessages, withPayloads(attachments, oneMessages),
-      hsUsers, hsCustomers, opts.customerEmails)
-    TicketTransform.conversations(
-      one, threads, hsMailboxes, hsCustomers, defaultMailboxEmail)
-      .toJSON.collect().mkString("\n")
+    withPayloads(attachments, oneMessages) { payloads =>
+      val threads = TicketTransform.threadsByTicket(
+        oneMessages, payloads, hsUsers, hsCustomers, opts.customerEmails)
+      TicketTransform.conversations(
+        one, threads, hsMailboxes, hsCustomers, defaultMailboxEmail)
+        .toJSON.collect().mkString("\n")
+    }
   }
 }

@@ -376,13 +376,27 @@ class PagedCountReaderFactory extends PartitionReaderFactory {
     }
 }
 
+/** Equal when schema, required columns, path, page range and rate are
+  * equal, as Spark's `FileScan` is over its file index: two identical
+  * `graft-pages` reads in one plan then canonicalize alike, so the second
+  * becomes a `ReusedExchange` of the first instead of a second fetch of
+  * every page. */
 class PagedJsonScan(
-    userSchema: StructType,
-    required: StructType,
-    path: String,
-    minPage: Int,
-    maxPage: Int,
-    rate: RateLimitConf) extends Scan with Batch with SupportsReportStatistics {
+    private val userSchema: StructType,
+    private val required: StructType,
+    private val path: String,
+    private val minPage: Int,
+    private val maxPage: Int,
+    private val rate: RateLimitConf) extends Scan with Batch with SupportsReportStatistics {
+
+  override def equals(other: Any): Boolean = other match {
+    case o: PagedJsonScan =>
+      userSchema == o.userSchema && required == o.required && path == o.path &&
+        minPage == o.minPage && maxPage == o.maxPage && rate == o.rate
+    case _ => false
+  }
+  override def hashCode(): Int =
+    (userSchema, required, path, minPage, maxPage, rate).hashCode()
 
   private val pages: Seq[(Int, String)] =
     PagedJson.listPages(path).filter { case (p, _) => p >= minPage && p <= maxPage }

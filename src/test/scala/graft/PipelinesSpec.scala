@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import graft.migration.{Fixtures, Pipelines, SyncOptions}
 
@@ -9,6 +11,20 @@ object PipelinePostRecorder {
   val posted: java.util.List[Row] = java.util.Collections.synchronizedList(
     new java.util.ArrayList[Row]())
   def post(rows: Seq[Row]): Unit = rows.foreach(posted.add)
+}
+
+/** Successful tasks per stage, and the final stage of each job the
+  * migration pipelines describe as their attachment fetch. */
+class FetchTaskCounter extends SparkListener {
+  val fetchStages = new java.util.concurrent.ConcurrentHashMap[Int, Int]() // job -> stage
+  private val perStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+  def tasks(stage: Int): Int = perStage.getOrDefault(stage, 0)
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        .exists(_.contains("fetch attachment payloads")))
+      fetchStages.put(e.jobId, e.stageIds.max)
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    if (e.taskInfo.successful) perStage.merge(e.stageId, 1, (a: Int, b: Int) => a + b)
 }
 
 /** End-to-end lifecycles (SURVEY §3): the three composed entry points over
@@ -79,8 +95,8 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("full lifecycle over the wire: paged acquire, live attachment fetch, HTTP publish") {
-    // The complete reference run end-to-end over HTTP: tickets acquired
-    // through the graft-pages DSv2 source, attachment payloads fetched live
+    // The complete reference run end-to-end over HTTP: tickets and messages
+    // acquired through the graft-pages DSv2 source, attachment payloads fetched live
     // (S6, one URL 404s onto the failed-note path), conversations published
     // per-record through the default HTTP publisher (K2). Ground truth is
     // the same pipeline run from in-memory fixtures: the wire run must
@@ -89,7 +105,15 @@ class PipelinesSpec extends SparkSpec {
     import graft.sources.HttpPublisher
     import scala.jdk.CollectionConverters._
 
-    val ticketLines = Fixtures.ticketsDf(spark).toJSON.collect().toSeq
+    // two pages per Groove resource, served at /groove/<resource>/
+    val groovePages: Map[String, Seq[Seq[String]]] = Map(
+      "tickets" -> Fixtures.ticketsDf(spark), "messages" -> Fixtures.messagesDf(spark))
+      .map { case (resource, df) =>
+        val lines = df.toJSON.collect().toSeq
+        resource -> lines.grouped((lines.size + 1) / 2).toSeq
+      }
+    val MetaPath = "/groove/(\\w+)/meta\\.json".r
+    val PagePath = "/groove/(\\w+)/page-(\\d+)\\.json".r
     val attachmentBytes: Map[String, Array[Byte]] = Fixtures.attachments
       .flatMap(a => a.payload.map(p => a.filename -> p)).toMap
     val published = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
@@ -101,18 +125,18 @@ class PipelinesSpec extends SparkSpec {
       else { ex.sendResponseHeaders(code, b.length); ex.getResponseBody.write(b) }
       ex.close()
     }
-    server.createContext("/groove", new HttpHandler { // paged ticket scan
+    server.createContext("/groove", new HttpHandler { // paged ticket + message scans
       override def handle(ex: HttpExchange): Unit = {
         val p = ex.getRequestURI.getPath
         served.add(p)
-        if (p.endsWith("meta.json")) respond(ex, 200,
-          s"""{"pagination":{"total_count":${ticketLines.size},"total_pages":2}}"""
-            .getBytes("UTF-8"))
-        else if (p.endsWith("page-1.json")) respond(ex, 200,
-          ticketLines.take(3).mkString("\n").getBytes("UTF-8"))
-        else if (p.endsWith("page-2.json")) respond(ex, 200,
-          ticketLines.drop(3).mkString("\n").getBytes("UTF-8"))
-        else respond(ex, 404, Array.empty)
+        p match {
+          case MetaPath(r) if groovePages.contains(r) => respond(ex, 200,
+            (s"""{"pagination":{"total_count":${groovePages(r).map(_.size).sum},""" +
+              s""""total_pages":${groovePages(r).size}}}""").getBytes("UTF-8"))
+          case PagePath(r, n) if groovePages.get(r).exists(_.size >= n.toInt) =>
+            respond(ex, 200, groovePages(r)(n.toInt - 1).mkString("\n").getBytes("UTF-8"))
+          case _ => respond(ex, 404, Array.empty)
+        }
       }
     })
     server.createContext("/files", new HttpHandler { // live attachment payloads
@@ -131,6 +155,16 @@ class PipelinesSpec extends SparkSpec {
         respond(ex, 201, Array.empty)
       }
     })
+    // one syncTickets call GETs every Groove page and attachment URL once
+    def assertEachGetOnce(paths: Seq[String]): Unit = {
+      val gets = paths.filter(p => PagePath.matches(p) || p.startsWith("/files/"))
+        .groupBy(identity).map { case (p, hits) => p -> hits.size }
+      assert(groovePages.keys.forall(r => gets.contains(s"/groove/$r/page-1.json")),
+        s"a Groove resource was not read over the wire: $gets")
+      assert(gets.values.forall(_ === 1), s"URLs GET more than once: $gets")
+    }
+    val fetchTasks = new FetchTaskCounter
+    spark.sparkContext.addSparkListener(fetchTasks)
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
@@ -146,17 +180,22 @@ class PipelinesSpec extends SparkSpec {
         .toOption.get
       val expected = posted.asScala.map(_.json).toSet
 
-      // wire run: tickets over graft-pages, attachments without payloads
-      // (forces the live fetch stage), publish through HttpPublisher
+      // wire run: tickets and messages over graft-pages, attachments
+      // without payloads (forces the live fetch stage), publish through
+      // HttpPublisher
       val wireTickets = spark.read.format("graft-pages")
-        .schema(Fixtures.ticketsDf(spark).schema).load(s"$base/groove")
+        .schema(Fixtures.ticketsDf(spark).schema).load(s"$base/groove/tickets")
+      val wireMessages = spark.read.format("graft-pages")
+        .schema(Fixtures.messagesDf(spark).schema).load(s"$base/groove/messages")
       import spark.implicits._
       val liveAttachments = Fixtures.attachments
         .map(a => (a.message_id, a.filename, a.size, s"$base/files/${a.filename}"))
         .toDF("message_id", "filename", "size", "url")
       val acc = spark.sparkContext.collectionAccumulator[(String, String)]("e2e-errs")
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+      served.clear()
       val report = Pipelines.syncTickets(
-        wireTickets, Fixtures.messagesDf(spark), liveAttachments,
+        wireTickets, wireMessages, liveAttachments,
         Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
         Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
         Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
@@ -190,12 +229,24 @@ class PipelinesSpec extends SparkSpec {
         .groupBy(identity).map { case (p, hits) => p -> hits.size }
       assert(fetchCounts.nonEmpty && fetchCounts.values.forall(_ === 1),
         s"attachment URLs re-fetched: $fetchCounts")
+      // every Groove page too: tickets and messages are acquired once and
+      // every consumer reads that copy
+      assertEachGetOnce(served.asScala.toSeq)
+      // the pipeline releases what it materialized
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+        "syncTickets left RDDs persisted")
+      // the fetch stage fans out: the last job of the attachment fetch
+      // (the checkpoint's own job) ran its GETs in more than one task
+      GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      val fetchStage = fetchTasks.fetchStages.asScala.maxBy(_._1)._2
+      assert(fetchTasks.tasks(fetchStage) > 1,
+        s"the attachment fetch ran in ${fetchTasks.tasks(fetchStage)} task(s)")
 
       // a --tickets point migration fetches ONLY that ticket's payloads:
       // the live fetch is semi-joined to the selected messages first
       served.clear()
       Pipelines.syncTickets(
-        wireTickets, Fixtures.messagesDf(spark), liveAttachments,
+        wireTickets, wireMessages, liveAttachments,
         Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
         Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
         Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
@@ -207,6 +258,12 @@ class PipelinesSpec extends SparkSpec {
       assert(fetched.nonEmpty && fetched.forall(p =>
         p.endsWith("burning.png") || p.endsWith("manual.pdf")),
         s"point migration fetched unrelated payloads: $fetched")
-    } finally server.stop(0)
+      assertEachGetOnce(served.asScala.toSeq)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+        "syncTickets left RDDs persisted")
+    } finally {
+      server.stop(0)
+      spark.sparkContext.removeSparkListener(fetchTasks)
+    }
   }
 }

@@ -458,6 +458,36 @@ class PlanSpec extends SparkSpec {
       s"V2 scan must plan exactly pages 2-5:\n${p.take(1500)}")
   }
 
+  test("graft-pages: identical scans in one plan share one exchange") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pages-reuse").toString
+    (1 to 3).foreach { p =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/page-$p.json"),
+        (1 to 4).map(i => s"""{"k":${p * 10 + i}}""").mkString("\n").getBytes("UTF-8"))
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/meta.json"),
+      """{"pagination":{"total_count":12,"total_pages":3}}""".getBytes("UTF-8"))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType)))
+    def perPage(pages: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      pages(spark.read.format("graft-pages").schema(schema).load(dir))
+        .groupBy(col("page")).agg(count(lit(1)).as("n"), max(col("k")).as("hi"))
+    def executed(pages: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val q = perPage(identity).unionByName(perPage(pages))
+      (q.collect().length, q.queryExecution.executedPlan.toString)
+    }
+    // two separate reads of the same pages: equal scans, so the second
+    // aggregate's exchange is the first one reused, not a second scan
+    val (same, samePlan) = executed(identity)
+    assert(same === 6)
+    assert(samePlan.contains("ReusedExchange"),
+      s"identical graft-pages scans must share one exchange:\n${samePlan.take(2500)}")
+    // a different page range is a different scan: nothing to reuse
+    val (pruned, prunedPlan) = executed(_.filter(col("page") >= 2))
+    assert(pruned === 5)
+    assert(!prunedPlan.contains("ReusedExchange"),
+      s"scans over different page ranges must not be reused:\n${prunedPlan.take(2500)}")
+  }
+
   test("q143: fuzzy join is an equi-join on variants; the DP never joins raw") {
     val p = plan("q143_fuzzy_name_pairs")
     // the deletion-neighborhood join must key on the variant (a hash or
